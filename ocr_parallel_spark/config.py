@@ -13,9 +13,6 @@ from __future__ import annotations
 CHUNK_SIZE = 40
 CHUNK_OVERLAP = 5
 
-# Token-coverage localization threshold (reference app/utils/text_localization.py:203)
-MATCH_THRESHOLD = 0.6
-
 # Refinement caps (reference app/utils/text_localization.py:580-586,634-640,685-699)
 MAX_FALLBACK_PAGES = 5
 MAX_PAGES_WITH_BOUNDARIES = 15
@@ -41,9 +38,6 @@ PDF_MAGIC = b"%FAKEPDF"
 # html payloads are MB-scale at Common-Crawl; keep Arrow batches small so one
 # batch of blobs fits comfortably in executor memory.
 ARROW_MAX_RECORDS_PER_BATCH = 256
-
-# Salt fan-out for pathologically hot domains (north_rule skew handling).
-DOMAIN_SALT_BUCKETS = 16
 
 # Default shuffle partitions for local testing; a real cluster would set this
 # to ~2-3x total cores via spark-submit conf.

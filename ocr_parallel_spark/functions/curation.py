@@ -1,5 +1,6 @@
-"""Web-corpus curation expressions: line synthesis, repetition signals,
-deterministic stratified sampling, and PII scrubbing.
+"""Web-corpus curation expressions: the screen fold that names each
+doc's verdict, line synthesis, repetition signals, deterministic
+stratified sampling, and PII scrubbing.
 
 These extend the training-data toolkit (SURVEY §2.8 beyond-reference
 scope) with the CCNet/Gopher-style curation steps a 100 TB text pipeline
@@ -17,10 +18,57 @@ lookaround, no '$' — see functions/urls.py for the '$'-vs-'\\z' trap).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Callable, Iterable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TOKENS_PER_LINE = 8
+
+# A screen is ``(reason, step)``: ``step(frame)`` returns the frame plus a
+# boolean ``_hit`` column and any verdict columns the screen records. A
+# screen that needs the survivors so far reads them as
+# ``drop_reason IS NULL``.
+Screen = tuple[str, Callable[[DataFrame], DataFrame]]
+
+# The per-document thresholds over the projected doc signals (pred_lang,
+# n_tokens, n_pii), shared by the batch job, the streaming tier and the
+# catalog's curation queries.
+DOC_THRESHOLDS = {
+    "lang": "pred_lang != 'en'",
+    "too_short": "n_tokens < 30",
+    "pii": "n_pii >= 2",
+}
+
+
+def fold_screens(frame: DataFrame, screens: Iterable[Screen]) -> DataFrame:
+    """Apply ``screens`` in order and add ``drop_reason``: the reason of
+    the first screen that hits the doc (a NULL ``_hit`` passes), NULL for
+    a doc that passes them all. The one writer of ``drop_reason``, so a
+    doc dropped by an earlier screen is never a survivor of a later one."""
+    frame = frame.withColumn("drop_reason", F.lit(None).cast("string"))
+    for reason, step in screens:
+        hit = F.coalesce(F.col("_hit"), F.lit(False))
+        frame = (
+            step(frame)
+            .withColumn(
+                "drop_reason",
+                F.coalesce(F.col("drop_reason"), F.when(hit, F.lit(reason))),
+            )
+            .drop("_hit")
+        )
+    return frame
+
+
+def flag_screen(reason: str, hit: Column) -> Screen:
+    """A screen whose hit is an expression over columns the frame has."""
+    return reason, lambda frame: frame.withColumn("_hit", hit)
+
+
+def threshold_screen(reason: str) -> Screen:
+    """The ``DOC_THRESHOLDS`` screen named ``reason``."""
+    return flag_screen(reason, F.expr(DOC_THRESHOLDS[reason]))
+
 
 # PII patterns in the Java-regex/RE2 common subset. Counts are taken
 # per-kind on the ORIGINAL text, independently of replacement; note the

@@ -8,7 +8,7 @@ text heuristics (SURVEY §2.8 F2-F4) to corpus curation at scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Tiny, fixed stopword inventories per language — heuristic language ID by
@@ -52,12 +52,26 @@ def detect_lang_from_hits(hits: dict[str, Column]) -> Column:
     return expr
 
 
+def with_lang_hits(d: DataFrame) -> tuple[DataFrame, dict[str, Column]]:
+    """Materialize the token split of ``norm`` once (``_toks``) and the
+    per-language hit counts as columns (``_h_<lang>``); returns the frame
+    and the hit columns ``detect_lang_from_hits`` takes. The lang
+    case-expression references each count several times; built inline
+    the split would re-evaluate per reference."""
+    d = d.withColumn("_toks", tokens_col(F.col("norm")))
+    for lang in LANG_PRECEDENCE:
+        d = d.withColumn(
+            f"_h_{lang}", stopword_hits_from_tokens(F.col("_toks"), lang)
+        )
+    return d, {lang: F.col(f"_h_{lang}") for lang in LANG_PRECEDENCE}
+
+
 def detect_lang(text_col: Column | str) -> Column:
     """Convenience form: highest stopword-hit language from raw text.
     NOTE: builds the token split inline inside every hit expression (the
     case references each count ~3x -> up to a dozen splits per row). Hot
     paths should materialize a tokens column + per-language hit columns
-    and call ``detect_lang_from_hits`` (see q_langid)."""
+    and call ``detect_lang_from_hits`` (see ``with_lang_hits``)."""
     hits = {lang: stopword_hits(text_col, lang) for lang in LANG_PRECEDENCE}
     return detect_lang_from_hits(hits)
 

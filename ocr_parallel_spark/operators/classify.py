@@ -1,11 +1,9 @@
 """Filters, predicates and status classification — all built-in expressions.
 
-Covers SURVEY §2.2: the not-found classifier (P2,
-/root/reference/app/services/extractor_service.py:145-157), row filters
-(P3), page validation (P4, /root/reference/app/utils/pdf_utils.py:31-42) and
-the payload size cap (P5, /root/reference/app/main.py:42-74). Also the
-JVM-side mirror of the kernel's normalization chain (F1,
-/root/reference/app/utils/text_cleaning.py:6-37) so normalization of
+Covers SURVEY §2.2: the not-found classifier (P2, reference
+extractor_service.py:145-157) and the payload size cap (P5, reference
+main.py:42-74). Also the JVM-side mirror of the kernel's normalization
+chain (F1, reference text_cleaning.py:6-37) so normalization of
 already-textual columns never leaves whole-stage codegen.
 """
 
@@ -71,23 +69,3 @@ def filter_oversized(
     a multi-byte UTF-8 payload would under-measure ~3x. Identical on
     binary columns."""
     return df.filter(F.octet_length(F.col(payload_col)) <= max_bytes)
-
-
-def validate_page_range(
-    df: DataFrame, page_col: str = "page", total_col: str = "total_pages"
-) -> DataFrame:
-    """P4 as error-as-data: out-of-range page numbers become status='error'
-    rows instead of task failures (pdf_utils.py:31-42 semantics)."""
-    ok = (F.col(page_col) >= 1) & (F.col(page_col) <= F.col(total_col))
-    return df.withColumn(
-        "page_status", F.when(ok, F.lit("found")).otherwise(F.lit("error"))
-    )
-
-
-def non_empty_rows(df: DataFrame, *cols: str) -> DataFrame:
-    """P3: drop rows where any named column is empty/NULL (CSV hygiene,
-    scripts/test_full_process.py:94-100)."""
-    cond = F.lit(True)
-    for c in cols:
-        cond = cond & F.col(c).isNotNull() & (F.trim(F.col(c)) != "")
-    return df.filter(cond)

@@ -44,7 +44,9 @@ def dedup_lines(
 
     Input: one row per (doc, line_no, line). Output: one row per doc —
     n_lines, n_kept (both bigint), kept_text (newline-joined survivors;
-    '' when everything was boilerplate, so no document vanishes).
+    '' when everything was boilerplate, so no document vanishes). A NULL
+    line is a placeholder that keeps a doc without lines in the output
+    (n_lines 0, n_kept 0, kept_text ''): it is never counted or kept.
 
     The join key is sha2(line) rather than the line text: frequency
     counting and the join-back then shuffle 32-byte keys instead of
@@ -67,29 +69,32 @@ def dedup_lines(
     """
     key = F.sha2(F.col(line_col), 256).alias("_line_key")
     keyed = lines.select(id_col, line_no_col, line_col, key)
-    count_src = keyed
+    count_src = keyed.filter(F.col(line_col).isNotNull())
     if cms_width:
         from ocr_parallel_spark.functions.cms import cms_build, cms_estimate
 
         grid = cms_build(
-            keyed.select("_line_key"), "_line_key", cms_width, cms_depth
+            count_src.select("_line_key"), "_line_key", cms_width, cms_depth
         )
         count_src = cms_estimate(
-            keyed, "_line_key", grid, cms_width, cms_depth, "_cms_est"
+            count_src, "_line_key", grid, cms_width, cms_depth, "_cms_est"
         ).filter(F.col("_cms_est") >= min_count)
     freq = count_src.groupBy("_line_key").agg(
         F.count_distinct(F.col(id_col)).alias("_line_docs")
     )
     # left join + coalesce-0: under the prefilter, sub-threshold lines
     # are absent from freq BY PROOF (est < min_count); without it the
-    # join is effectively inner (every key counted) — same results.
-    kept = F.coalesce(F.col("_line_docs"), F.lit(0)) < min_count
+    # join is effectively inner for every non-NULL line (every such key
+    # counted) — same results.
+    kept = F.col(line_col).isNotNull() & (
+        F.coalesce(F.col("_line_docs"), F.lit(0)) < min_count
+    )
     return (
         keyed.join(freq, "_line_key", "left")
         .groupBy(id_col)
         .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(kept.cast("long")).alias("n_kept"),
+            F.count(F.col(line_col)).alias("n_lines"),
+            F.count(F.when(kept, F.lit(1))).alias("n_kept"),
             F.array_join(
                 F.transform(
                     F.array_sort(

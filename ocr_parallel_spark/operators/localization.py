@@ -101,7 +101,7 @@ def expand_variants(
     expanded = F.flatten(
         F.transform(
             tokens_col,
-            lambda t: F.coalesce(syn_map.getItem(t), F.array(t)),
+            lambda t: F.coalesce(F.element_at(syn_map, t), F.array(t)),
         )
     )
     return F.array_distinct(expanded)

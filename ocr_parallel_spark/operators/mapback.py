@@ -1,11 +1,12 @@
-"""Order-preserving map-back join (SURVEY §2.3 J1 + §2.6 W5).
+"""Order-preserving map-back (SURVEY §2.3 J1 + §2.6 W5).
 
-Reference semantics (/root/reference/app/utils/deduplication.py:64-95 with
-the mapping built :24-61): every original input position re-attaches to the
-result computed for its unique key, preserving input order. In Spark that
-is an equi left-join of the full input against the deduped results —
-broadcast-friendly because the unique side shrank — with order restored by
-the carried input index, never by arrival order.
+Reference semantics (deduplication.py:64-95 with the mapping built
+:24-61): every original input position re-attaches to the result
+computed for its unique key, preserving input order. In Spark the
+keep-first representative of each key is a min-id window
+(``representative``, which the ``mapback_rep`` catalog query runs), and
+order is restored by the carried input index (``with_input_idx``),
+never by arrival order.
 """
 
 from __future__ import annotations
@@ -65,16 +66,3 @@ def representative(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame
     key — the insertion-order-first analog)."""
     w = Window.partitionBy(*key_cols)
     return df.withColumn("rep_id", F.min(id_col).over(w))
-
-
-def map_back(
-    inputs: DataFrame,
-    unique_results: DataFrame,
-    key_cols: list[str],
-    broadcast_results: bool = True,
-) -> DataFrame:
-    """J1: left-join inputs against per-key results. Missing keys survive
-    as NULL result columns (the reference backfills error rows,
-    deduplication.py:85-95 — callers classify NULLs downstream)."""
-    right = F.broadcast(unique_results) if broadcast_results else unique_results
-    return inputs.join(right, on=key_cols, how="left")

@@ -35,19 +35,6 @@ HAMMING_THRESHOLD = 3
 MAX_BAND_BUCKET = 256
 
 
-def simhash_band_cols(df: DataFrame, simhash_col: str = "simhash") -> DataFrame:
-    """Split the int64 SimHash into N_BANDS unsigned 16-bit band values."""
-    out = df
-    for i in range(N_BANDS):
-        out = out.withColumn(
-            f"band_{i}",
-            F.shiftrightunsigned(F.col(simhash_col), i * BAND_BITS).bitwiseAND(
-                F.lit((1 << BAND_BITS) - 1)
-            ),
-        )
-    return out
-
-
 def mark_simhash_near_dups(
     df: DataFrame,
     simhash_col: str = "simhash",
@@ -160,7 +147,6 @@ def mark_simhash_near_dups(
 
 # ---- MinHash LSH (shingle Jaccard) ------------------------------------------
 
-N_PERM = 64
 LSH_BANDS = 16
 
 

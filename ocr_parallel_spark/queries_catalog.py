@@ -35,6 +35,7 @@ from ocr_parallel_spark.operators.chunking import (
 from ocr_parallel_spark.operators.classify import classify_status, normalize_col
 from ocr_parallel_spark.operators.dedup import dedup_savings, keep_first
 from ocr_parallel_spark.operators.localization import localize
+from ocr_parallel_spark.operators.mapback import representative
 from ocr_parallel_spark.operators.neardup import minhash_candidate_pairs
 from ocr_parallel_spark.operators.sessionize import densest_range, sessionize
 
@@ -136,9 +137,8 @@ def q_mapback_rep(spark, sf_dir):
     """J1 map-back: every row joined to its keep-first representative
     (deduplication.py:64-95 as an equi-join)."""
     d = _docs(spark, sf_dir).withColumn("content_sha256", F.sha2(F.col("norm"), 256))
-    w = Window.partitionBy("content_sha256")
-    return d.select(
-        "doc_id", F.min("doc_id").over(w).alias("rep_doc_id")
+    return representative(d, ["content_sha256"], "doc_id").select(
+        "doc_id", F.col("rep_id").alias("rep_doc_id")
     )
 
 
@@ -240,30 +240,15 @@ def q_set_union(spark, sf_dir):
     return a.union(b).distinct()
 
 
-def _with_lang_hits(d):
-    """Materialize the token split once and the per-language hit counts
-    as columns (the lang case-expression references each count several
-    times; built inline the split would re-evaluate per reference)."""
-    from ocr_parallel_spark.functions.text_quality import (
-        LANG_PRECEDENCE,
-        stopword_hits_from_tokens,
-        tokens_col,
-    )
-
-    d = d.withColumn("_toks", tokens_col(F.col("norm")))
-    for lang in LANG_PRECEDENCE:
-        d = d.withColumn(
-            f"_h_{lang}", stopword_hits_from_tokens(F.col("_toks"), lang)
-        )
-    return d, {lang: F.col(f"_h_{lang}") for lang in LANG_PRECEDENCE}
-
-
 def q_langid(spark, sf_dir):
     """Language ID by stopword hits (training-data toolkit): ONE token
     split per row, hit counts as columns, case over attributes."""
-    from ocr_parallel_spark.functions.text_quality import detect_lang_from_hits
+    from ocr_parallel_spark.functions.text_quality import (
+        detect_lang_from_hits,
+        with_lang_hits,
+    )
 
-    d, hits = _with_lang_hits(_docs(spark, sf_dir))
+    d, hits = with_lang_hits(_docs(spark, sf_dir))
     return d.select("doc_id", detect_lang_from_hits(hits).alias("pred_lang"))
 
 
@@ -2789,8 +2774,17 @@ def q_curation_pipeline(spark, sf_dir):
     window ranks ALL docs by doc_id (a survivor of the content window
     may itself be dropped for an earlier reason — documented, and the
     SQL twin does the same)."""
-    from ocr_parallel_spark.functions.curation import pii_counts
-    from ocr_parallel_spark.functions.text_quality import detect_lang_from_hits
+    from ocr_parallel_spark.functions.curation import (
+        DOC_THRESHOLDS,
+        flag_screen,
+        fold_screens,
+        pii_counts,
+        threshold_screen,
+    )
+    from ocr_parallel_spark.functions.text_quality import (
+        detect_lang_from_hits,
+        with_lang_hits,
+    )
 
     # ONE materialization of (doc_id, norm) shared by the scalar
     # screens, the line-dedup branch, and the decontamination branch:
@@ -2803,7 +2797,7 @@ def q_curation_pipeline(spark, sf_dir):
         .select("doc_id", "norm")
         .localCheckpoint(eager=False)
     )
-    d, hits = _with_lang_hits(shared)
+    d, hits = with_lang_hits(shared)
     # Materialize the tainted texts as columns BEFORE counting (the
     # discipline of q_pii_scrub/q_encoding_quality): each is referenced
     # by 2-3 regexp counts, and Catalyst won't inline a multiply-
@@ -2830,17 +2824,16 @@ def q_curation_pipeline(spark, sf_dir):
     cont = q_decontaminate(spark, sf_dir, docs=shared).select(
         "doc_id", "contaminated"
     )
-    j = scalars.join(lined, "doc_id").join(cont, "doc_id")
     w = Window.partitionBy(F.sha2(F.col("kept_text"), 256)).orderBy("doc_id")
-    j = j.withColumn("_dup", F.row_number().over(w) > 1)
-    reason = (
-        F.when(F.col("suspect_encoding"), F.lit("encoding"))
-        .when(F.col("pred_lang") != "en", F.lit("lang"))
-        .when(F.col("n_tokens") < 30, F.lit("too_short"))
-        .when(F.col("n_pii") >= 2, F.lit("pii"))
-        .when(F.col("n_kept_lines") == 0, F.lit("boilerplate"))
-        .when(F.col("contaminated"), F.lit("contaminated"))
-        .when(F.col("_dup"), F.lit("dup"))
+    j = fold_screens(
+        scalars.join(lined, "doc_id").join(cont, "doc_id"),
+        [
+            flag_screen("encoding", F.col("suspect_encoding")),
+            *(threshold_screen(r) for r in DOC_THRESHOLDS),
+            flag_screen("boilerplate", F.col("n_kept_lines") == 0),
+            flag_screen("contaminated", F.col("contaminated")),
+            flag_screen("dup", F.row_number().over(w) > 1),
+        ],
     )
     return j.select(
         "doc_id",
@@ -2849,8 +2842,8 @@ def q_curation_pipeline(spark, sf_dir):
         "n_pii",
         "n_kept_lines",
         "contaminated",
-        reason.isNull().alias("kept"),
-        reason.alias("drop_reason"),
+        F.col("drop_reason").isNull().alias("kept"),
+        "drop_reason",
     )
 
 
@@ -2862,9 +2855,17 @@ def q_corpus_curation(spark, sf_dir):
     alpha_chars >= n_chars for the 0.5 ratio) so the oracle compare has
     zero float exposure. One stopword-expression projection + one keyed
     window — curation of 10^12 docs is a scan plus a single shuffle."""
-    from ocr_parallel_spark.functions.text_quality import detect_lang_from_hits
+    from ocr_parallel_spark.functions.curation import (
+        flag_screen,
+        fold_screens,
+        threshold_screen,
+    )
+    from ocr_parallel_spark.functions.text_quality import (
+        detect_lang_from_hits,
+        with_lang_hits,
+    )
 
-    d, hits = _with_lang_hits(_docs(spark, sf_dir))
+    d, hits = with_lang_hits(_docs(spark, sf_dir))
     n_tokens = F.size(F.col("_toks"))
     n_chars_norm = F.length("norm")
     alpha_chars = F.length(F.regexp_replace(F.lower(F.col("norm")), r"[^a-z]", ""))
@@ -2877,18 +2878,21 @@ def q_corpus_curation(spark, sf_dir):
         alpha_chars.alias("_ac"),
         (F.row_number().over(w) > 1).alias("_dup"),
     )
-    reason = (
-        F.when(F.col("pred_lang") != "en", F.lit("lang"))
-        .when(F.col("n_tokens") < 30, F.lit("too_short"))
-        .when(F.col("_ac") * 2 < F.col("_nc"), F.lit("low_alpha"))
-        .when(F.col("_dup"), F.lit("dup"))
+    d = fold_screens(
+        d,
+        [
+            threshold_screen("lang"),
+            threshold_screen("too_short"),
+            flag_screen("low_alpha", F.col("_ac") * 2 < F.col("_nc")),
+            flag_screen("dup", F.col("_dup")),
+        ],
     )
     return d.select(
         "doc_id",
         "pred_lang",
         "n_tokens",
-        reason.isNull().alias("kept"),
-        reason.alias("drop_reason"),
+        F.col("drop_reason").isNull().alias("kept"),
+        "drop_reason",
     )
 
 

@@ -16,10 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    FloatType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -33,13 +30,6 @@ PAGES_SCHEMA = StructType(
         StructField("html", BinaryType()),
         StructField("text", StringType()),
         StructField("lang", StringType()),
-    ]
-)
-
-EMBEDDINGS_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("embedding", ArrayType(FloatType())),
     ]
 )
 

@@ -26,12 +26,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ocr_parallel_spark.functions.curation import pii_counts
+from ocr_parallel_spark.functions.curation import (
+    DOC_THRESHOLDS,
+    Screen,
+    fold_screens,
+    pii_counts,
+    threshold_screen,
+)
 from ocr_parallel_spark.functions.text_quality import (
-    LANG_PRECEDENCE,
     detect_lang_from_hits,
-    stopword_hits_from_tokens,
-    tokens_col,
+    with_lang_hits,
 )
 from ocr_parallel_spark.functions.urls import host_col
 from ocr_parallel_spark.operators.classify import normalize_col
@@ -55,28 +59,25 @@ def read_docs_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
-def curate_docs(docs: DataFrame, blocked_hosts: DataFrame) -> DataFrame:
-    """The streaming-safe curation projection + blocklist join. Works on
-    a streaming OR batch ``docs`` DataFrame unchanged (the equivalence is
-    pinned by test_streaming_curation) — one definition, two tiers.
-
-    ``blocked_hosts``: static DataFrame with a ``host`` column."""
-    d = docs.withColumn("norm", normalize_col("text")).withColumn(
-        "_toks", tokens_col(F.col("norm"))
-    )
-    for lang in LANG_PRECEDENCE:
-        d = d.withColumn(
-            f"_h_{lang}", stopword_hits_from_tokens(F.col("_toks"), lang)
-        )
-    hits = {lang: F.col(f"_h_{lang}") for lang in LANG_PRECEDENCE}
+def doc_signals(docs: DataFrame) -> DataFrame:
+    """The per-document curation signals as one stateless projection:
+    ``(doc_id, host, pred_lang, n_tokens, n_pii)``."""
+    d, hits = with_lang_hits(docs.withColumn("norm", normalize_col("text")))
     counts = pii_counts(F.col("norm"))
-    d = d.select(
+    return d.select(
         "doc_id",
         host_col(F.col("url")).alias("host"),
         detect_lang_from_hits(hits).alias("pred_lang"),
         F.size(F.col("_toks")).alias("n_tokens"),
         (counts["email"] + counts["phone"] + counts["ip"]).alias("n_pii"),
     )
+
+
+def doc_screens(blocked_hosts: DataFrame) -> list[Screen]:
+    """The per-document screens over ``doc_signals``, in verdict order:
+    the domain blocklist, then ``DOC_THRESHOLDS``.
+
+    ``blocked_hosts``: static DataFrame with a ``host`` column."""
     blocked = F.broadcast(
         # distinct AFTER lowercasing: caller rows that collide once
         # lowered ('Example.com' + 'example.com') would otherwise fan
@@ -84,23 +85,28 @@ def curate_docs(docs: DataFrame, blocked_hosts: DataFrame) -> DataFrame:
         # the left join
         blocked_hosts.select(F.lower(F.col("host")).alias("host"))
         .distinct()
-        .withColumn("_blocked", F.lit(True))
+        .withColumn("_hit", F.lit(True))
     )
-    d = d.join(blocked, "host", "left")
-    reason = (
-        F.when(F.coalesce(F.col("_blocked"), F.lit(False)), F.lit("blocked"))
-        .when(F.col("pred_lang") != "en", F.lit("lang"))
-        .when(F.col("n_tokens") < 30, F.lit("too_short"))
-        .when(F.col("n_pii") >= 2, F.lit("pii"))
-    )
+    return [
+        ("blocked", lambda d: d.join(blocked, "host", "left")),
+        *(threshold_screen(r) for r in DOC_THRESHOLDS),
+    ]
+
+
+def curate_docs(docs: DataFrame, blocked_hosts: DataFrame) -> DataFrame:
+    """The streaming-safe curation verdict: ``doc_screens`` folded over
+    ``doc_signals``. Works on a streaming OR batch ``docs`` DataFrame
+    unchanged (the equivalence is pinned by test_streaming_curation) —
+    one definition, two tiers."""
+    d = fold_screens(doc_signals(docs), doc_screens(blocked_hosts))
     return d.select(
         "doc_id",
         "host",
         "pred_lang",
         "n_tokens",
         "n_pii",
-        reason.isNull().alias("kept"),
-        reason.alias("drop_reason"),
+        F.col("drop_reason").isNull().alias("kept"),
+        "drop_reason",
     )
 
 

@@ -1,13 +1,17 @@
 """Web-corpus curation batch job (spark-submit entrypoint).
 
-docs parquet (doc_id, url, text, lang, source) -> per-document screens
-(language ID, token count, PII, domain blocklist — the SAME curate_docs
-definition the streaming tier runs) -> inter-document line dedup (CCNet
-boilerplate removal over the docs' real newlines; single-line docs fall
-back to fixed-width word lines) -> exact dedup on the CLEANED text ->
-optional benchmark decontamination (--bench parquet with a ``text``
-column) -> per-doc verdict rows snapshot-committed, resumable on doc_id
-(a crash or a re-run with new docs processes only never-committed ids).
+docs parquet (doc_id, url, text, lang, source) -> an ordered list of
+screens, each doc's verdict the first one that hits it. The order is
+written in one place, the ``screens`` list in ``build_output``: the
+per-document screens (domain blocklist, language ID, token count, PII —
+the SAME definition the streaming tier runs), optional robots, quality
+and LM screens, inter-document line dedup (CCNet boilerplate removal
+over the docs' real newlines; single-line docs fall back to fixed-width
+word lines), optional benchmark decontamination (--bench parquet with a
+``text`` column), exact dedup on the CLEANED text, optional near and
+semantic dedup. Per-doc verdict rows are snapshot-committed, resumable
+on doc_id (a crash or a re-run with new docs processes only
+never-committed ids).
 
     spark-submit --py-files ocr_parallel_spark.zip scripts/job_curate.py \
         --input /data/docs --output /data/verdicts \
@@ -20,6 +24,9 @@ from __future__ import annotations
 import argparse
 import json
 
+# Hash count of the Bloom sidecar over committed kept hashes (--bloom-bits).
+BLOOM_HASHES = 4
+
 
 def build_output(
     spark,
@@ -27,7 +34,6 @@ def build_output(
     blocked_hosts=None,
     bench_docs=None,
     min_line_count: int = 5,
-    line_tokens: int = 8,
     robots_df=None,
     near_dup: bool = False,
     near_dup_threshold: float = 0.5,
@@ -42,7 +48,6 @@ def build_output(
     prior_kept_neardup=None,
     prior_bloom=None,
     bloom_bits: int = 0,
-    bloom_hashes: int = 4,
     embeddings=None,
     sem_threshold: float = 0.9,
     sem_cells: int = 64,
@@ -53,10 +58,14 @@ def build_output(
 ):
     """The batch curation composition; returns one verdict row per doc.
 
-    ``quality_filter=True`` adds the classifier screen, folded in
-    before the content stages like robots so a low-quality doc can
-    never claim a dup-canonical slot. With ``quality_weights`` (a
-    ``(_bucket, _wt)`` DataFrame, e.g. fit by
+    The ``screens`` list below is the one place the screen order is
+    written: each doc's ``drop_reason`` is the first screen that hits it
+    (functions/curation.py fold_screens), and every later screen sees
+    only the survivors so far, so a screened-out doc never claims a
+    dup-canonical slot.
+
+    ``quality_filter=True`` adds the classifier screen. With
+    ``quality_weights`` (a ``(_bucket, _wt)`` DataFrame, e.g. fit by
     functions/curation.py train_quality_weights and persisted to
     parquet) the screen is the TRAINED ternary-vote classifier —
     measured precision/recall 1.0 on the held-out planted-taint
@@ -94,8 +103,9 @@ def build_output(
 
     INVARIANT: every input doc_id yields exactly one verdict row — a
     NULL-text doc flows through as ``boilerplate`` (text is coalesced
-    to '' and the lines join is a left join), never silently lost and
-    re-selected as TODO forever (ADVICE round 3).
+    to '' and a doc without lines keeps a placeholder line, so dedup_lines
+    emits a row for every doc), never silently lost and re-selected as
+    TODO forever (ADVICE round 3).
 
     ``prior_kept_hashes`` (one ``content_sha`` column — main() feeds
     the committed KEPT docs' hashes here on incremental runs): a new
@@ -146,10 +156,14 @@ def build_output(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ocr_parallel_spark.functions.curation import word_lines, word_ngrams
+    from ocr_parallel_spark.functions.curation import (
+        fold_screens,
+        word_lines,
+        word_ngrams,
+    )
     from ocr_parallel_spark.operators.classify import normalize_col
     from ocr_parallel_spark.operators.linededup import dedup_lines
-    from ocr_parallel_spark.streaming.curation import curate_docs
+    from ocr_parallel_spark.streaming.curation import doc_screens, doc_signals
 
     if blocked_hosts is None:
         blocked_hosts = spark.createDataFrame([], "host string")
@@ -159,13 +173,17 @@ def build_output(
     # once — checkpoint blocks are freed by the ContextCleaner when the
     # result is dropped (the dedup_lines docstring's own advice).
     docs = docs.localCheckpoint(eager=False)
-    screens = curate_docs(docs, blocked_hosts)
+    # One shared normalized frame for both model screens. NOTE this is
+    # frame-level sharing only: each screen joins it in its own subtree,
+    # so the regexp normalize is evaluated per branch over the
+    # checkpointed docs scan — deliberately NOT re-checkpointed, because
+    # materializing the normalized corpus costs a full write+read of the
+    # text bytes while recomputing three regexps is scan-bound CPU.
+    normed = docs.select("doc_id", normalize_col("text").alias("norm"))
 
-    if robots_df is not None:
-        # Retroactive robots screen (functions/robots.py): folded into
-        # drop_reason BEFORE the content stages so a disallowed doc can
-        # never claim a dup-canonical slot. ``robots_df``: (host,
-        # robots_txt). A url with no path component matches as '/'.
+    def robots(j):
+        # Retroactive robots screen (functions/robots.py). ``robots_df``:
+        # (host, robots_txt). A url with no path component matches as '/'.
         from ocr_parallel_spark.functions.robots import apply_robots, parse_robots
         from ocr_parallel_spark.functions.urls import host_col
 
@@ -178,40 +196,11 @@ def build_output(
             F.when(path == "", F.lit("/")).otherwise(path).alias("path"),
         )
         verdict = apply_robots(urls, parse_robots(robots_df)).select(
-            "doc_id", "disallowed"
+            "doc_id", F.col("disallowed").alias("_hit")
         )
-        screens = (
-            screens.join(verdict, "doc_id", "left")
-            .withColumn(
-                "drop_reason",
-                F.coalesce(
-                    F.col("drop_reason"),
-                    F.when(
-                        F.coalesce(F.col("disallowed"), F.lit(False)),
-                        F.lit("robots"),
-                    ),
-                ),
-            )
-            .withColumn("kept", F.col("drop_reason").isNull())
-            .drop("disallowed")
-        )
+        return j.join(verdict, "doc_id", "left")
 
-    # Real web text carries newlines; the synthetic corpus is
-    # single-line, so fall back to fixed-width word lines there — the
-    # downstream frequency algebra is line-source agnostic. Split on
-    # \r?\n, not \n: CRLF docs would otherwise carry a trailing \r per
-    # line, splitting every banner's frequency count across the two
-    # line-ending variants (and splitting dup hashes the same way).
-    # One shared normalized frame for both model screens. NOTE this is
-    # frame-level sharing only: each screen joins it in its own subtree,
-    # so the regexp normalize is evaluated per branch over the
-    # checkpointed docs scan — deliberately NOT re-checkpointed, because
-    # materializing the normalized corpus costs a full write+read of the
-    # text bytes while recomputing three regexps is scan-bound CPU.
-    if quality_filter or lm_ref is not None:
-        normed = docs.select("doc_id", normalize_col("text").alias("norm"))
-
-    if quality_filter:
+    def low_quality(j):
         from ocr_parallel_spark.functions.curation import (
             hashed_quality_scores,
             trained_quality_scores,
@@ -219,29 +208,15 @@ def build_output(
 
         if quality_weights is not None:
             qs = trained_quality_scores(normed, quality_weights).select(
-                "doc_id", (F.col("score") > 0).alias("_lowq")
+                "doc_id", (F.col("score") > 0).alias("_hit")
             )
         else:
             qs = hashed_quality_scores(normed, "norm", "doc_id").select(
-                "doc_id", (F.col("score_mi") < 0).alias("_lowq")
+                "doc_id", (F.col("score_mi") < 0).alias("_hit")
             )
-        screens = (
-            screens.join(qs, "doc_id", "left")
-            .withColumn(
-                "drop_reason",
-                F.coalesce(
-                    F.col("drop_reason"),
-                    F.when(
-                        F.coalesce(F.col("_lowq"), F.lit(False)),
-                        F.lit("low_quality"),
-                    ),
-                ),
-            )
-            .withColumn("kept", F.col("drop_reason").isNull())
-            .drop("_lowq")
-        )
+        return j.join(qs, "doc_id", "left")
 
-    if lm_ref is not None:
+    def high_surprise(j):
         from ocr_parallel_spark.functions.lm import (
             doc_surprise,
             fit_trigram_lm,
@@ -255,6 +230,7 @@ def build_output(
             )
         )
         scored = doc_surprise(normed, model).select("doc_id", "surprise_x16")
+        cut = F.lit(lm_max_x16)
         if lm_tail_drop:
             # CCNet's actual cut (--lm-drop-tail): no magic constant —
             # NOTE the cut derives from THIS RUN's scored slice: under
@@ -279,7 +255,7 @@ def build_output(
             wall = Window.rowsBetween(
                 Window.unboundedPreceding, Window.unboundedFollowing
             )
-            cut = (
+            cut2 = (
                 hist.select(
                     "surprise_x16",
                     F.sum("_c").over(wcum).alias("_cum"),
@@ -288,67 +264,51 @@ def build_output(
                 .filter(F.col("_cum") * 3 >= 2 * F.col("_n"))
                 .agg(F.min("surprise_x16").alias("_cut2"))
             )
-            ls = scored.crossJoin(F.broadcast(cut)).select(
-                "doc_id",
-                "surprise_x16",
-                # NULL surprise (< 3 tokens) keeps: too short to judge.
-                (F.col("surprise_x16") > F.col("_cut2")).alias("_highs"),
-            )
-        else:
-            ls = scored.select(
-                "doc_id",
-                "surprise_x16",
-                # NULL surprise (< 3 tokens) keeps: too short to judge.
-                (F.col("surprise_x16") > lm_max_x16).alias("_highs"),
-            )
-        screens = (
-            screens.join(ls, "doc_id", "left")
-            .withColumn(
-                "drop_reason",
-                F.coalesce(
-                    F.col("drop_reason"),
-                    F.when(
-                        F.coalesce(F.col("_highs"), F.lit(False)),
-                        F.lit("high_surprise"),
-                    ),
-                ),
-            )
-            .withColumn("kept", F.col("drop_reason").isNull())
-            .drop("_highs")
+            scored = scored.crossJoin(F.broadcast(cut2))
+            cut = F.col("_cut2")
+        ls = scored.select(
+            "doc_id",
+            "surprise_x16",
+            # NULL surprise (< 3 tokens) keeps: too short to judge.
+            (F.col("surprise_x16") > cut).alias("_hit"),
+        )
+        return j.join(ls, "doc_id", "left")
+
+    def boilerplate(j):
+        # NULL text would make every expression below NULL; coalesce
+        # first. Real web text carries newlines; the synthetic corpus is
+        # single-line, so fall back to fixed-width word lines there —
+        # the downstream frequency algebra is line-source agnostic.
+        # Split on \r?\n, not \n: CRLF docs would otherwise carry a
+        # trailing \r per line, splitting every banner's frequency
+        # count across the two line-ending variants (and splitting dup
+        # hashes the same way).
+        text_nn = F.coalesce(F.col("text"), F.lit(""))
+        lines_arr = F.when(
+            F.instr(text_nn, "\n") > 0, F.split(text_nn, r"\r?\n")
+        ).otherwise(word_lines(F.split(normalize_col(text_nn), " ")))
+        # Empty lines (blank separators in real web text, the single ''
+        # line an empty/NULL doc synthesizes) carry no content: they
+        # would only pollute the frequency table (and give empty docs a
+        # phantom kept line), so they are dropped before counting. A doc
+        # left with no line explodes to one NULL placeholder line, which
+        # dedup_lines keeps in its output as n_kept 0, kept_text '': every
+        # doc has a `lined` row, so the join is inner and no verdict row
+        # is lost (a lost row is re-selected as TODO on every resume).
+        lines = docs.select(
+            "doc_id",
+            F.posexplode_outer(F.filter(lines_arr, lambda x: x != "")).alias(
+                "line_no", "line"
+            ),
+        )
+        lined = dedup_lines(lines, min_count=min_line_count).select(
+            "doc_id", F.col("n_kept").alias("n_kept_lines"), "kept_text"
+        )
+        return j.join(lined, "doc_id").withColumn(
+            "_hit", F.col("n_kept_lines") == 0
         )
 
-    # NULL text would make every expression below NULL: the [null] line
-    # key is dropped by dedup_lines' frequency equi-join, the doc
-    # vanishes from `lined`, and an inner screens<->lined join would
-    # silently drop its verdict row — the doc then re-selected as TODO
-    # on every resume run. Coalesce first; belt-and-braces, the join
-    # below is ALSO a left join with defaults.
-    text_nn = F.coalesce(F.col("text"), F.lit(""))
-    norm = normalize_col(text_nn)
-    has_nl = F.instr(text_nn, "\n") > 0
-    lines_arr = F.when(has_nl, F.split(text_nn, r"\r?\n")).otherwise(
-        word_lines(F.split(norm, " "), line_tokens)
-    )
-    # Empty lines (blank separators in real web text, the single ''
-    # line an empty/NULL doc synthesizes) carry no content: they would
-    # only pollute the frequency table (and give empty docs a phantom
-    # kept line), so they are dropped before counting.
-    lines = docs.select(
-        "doc_id", F.posexplode(lines_arr).alias("line_no", "line")
-    ).filter(F.col("line") != "")
-    lined = dedup_lines(lines, min_count=min_line_count).select(
-        "doc_id", F.col("n_kept").alias("n_kept_lines"), "kept_text"
-    )
-
-    j = (
-        screens.join(lined, "doc_id", "left")
-        .withColumn(
-            "n_kept_lines", F.coalesce(F.col("n_kept_lines"), F.lit(0))
-        )
-        .withColumn("kept_text", F.coalesce(F.col("kept_text"), F.lit("")))
-    )
-
-    if bench_docs is not None:
+    def contaminated(j):
         grams = word_ngrams(F.split(normalize_col("text"), " "), 8)
         bench = F.broadcast(
             bench_docs.select(F.explode(F.array_distinct(grams)).alias("gram"))
@@ -359,102 +319,85 @@ def build_output(
         )
         hits = (
             doc_grams.join(bench, "gram").select("doc_id").distinct()
-            .withColumn("_cont", F.lit(True))
+            .withColumn("contaminated", F.lit(True))
         )
-        j = j.join(hits, "doc_id", "left").withColumn(
-            "contaminated", F.coalesce(F.col("_cont"), F.lit(False))
+        return (
+            j.join(hits, "doc_id", "left")
+            .withColumn(
+                "contaminated", F.coalesce(F.col("contaminated"), F.lit(False))
+            )
+            .withColumn("_hit", F.col("contaminated"))
         )
-    else:
-        j = j.withColumn("contaminated", F.lit(False))
 
-    # Exact-dup ranking runs ONLY over docs that survive every earlier
-    # stage (screens, boilerplate, contamination — hence computed after
-    # the bench join): a screened-out doc must never claim the canonical
-    # slot, or its kept twin would be dropped as 'dup' and the content
-    # permanently lost from the committed kept set. Ranking the eligible
-    # subset also keeps the all-boilerplate kept_text='' mass out of the
-    # window — at scale that constant key would otherwise funnel
-    # millions of rows into one straggler task.
-    j = j.withColumn("content_sha", F.sha2(F.col("kept_text"), 256))
+    def dup(j):
+        # Exact dedup on the CLEANED text, ranked over the survivors only:
+        # that also keeps the all-boilerplate kept_text='' mass out of the
+        # window — at scale that constant key would otherwise funnel
+        # millions of rows into one straggler task.
+        j = j.withColumn("content_sha", F.sha2(F.col("kept_text"), 256))
+        # Webgraph prior (--graph-prior, VERDICT r4 #7): per-host authority
+        # from the pagerank_by_host rollup (host, host_rank_mi) — broadcast
+        # (hosts are tiny vs docs), recorded as a verdict column on every
+        # row (0 for hosts absent from the graph), and used below as the
+        # exact-dup canonical TIEBREAKER: among byte-identical twins the
+        # highest-authority host keeps the slot, doc_id breaking residual
+        # ties — the composition the oracle-gated `graph_prior` catalog
+        # query pins. Near-dup canonical stays min-doc_id (cluster members
+        # are only similar, not identical; stable ids beat rank there).
+        order = [F.col("doc_id")]
+        if graph_prior is not None:
+            j = j.join(
+                F.broadcast(graph_prior.select("host", "host_rank_mi")),
+                "host",
+                "left",
+            ).withColumn(
+                "host_rank_mi",
+                F.coalesce(F.col("host_rank_mi"), F.lit(0)).cast("long"),
+            )
+            order.insert(0, F.col("host_rank_mi").desc())
+        eligible = j.filter(F.col("drop_reason").isNull())
+        prior_dups = None
+        if prior_kept_hashes is not None:
+            # Cross-run exact dedup: a hash already committed KEPT owns its
+            # canonical slot forever — new twins drop as dup and are also
+            # excluded from this run's canonical window.
+            probe_src = eligible
+            if prior_bloom is not None and bloom_bits:
+                # Bloom prefilter (functions/bloom.py): the persisted word
+                # table over committed kept hashes screens the NEW side with
+                # broadcast joins only — docs whose hash is definitely not
+                # committed (no false negatives, shared position derivation)
+                # skip the exact semi-join entirely, so the shuffle below
+                # carries the ~(dup-rate + FP-rate) slice instead of the
+                # whole run. Verdicts are IDENTICAL with or without the
+                # sidecar (pytest pins it): a false positive only costs a
+                # redundant exact probe.
+                from ocr_parallel_spark.functions.bloom import bloom_probe
 
-    # Webgraph prior (--graph-prior, VERDICT r4 #7): per-host authority
-    # from the pagerank_by_host rollup (host, host_rank_mi) — broadcast
-    # (hosts are tiny vs docs), recorded as a verdict column on every
-    # row (0 for hosts absent from the graph), and used below as the
-    # exact-dup canonical TIEBREAKER: among byte-identical twins the
-    # highest-authority host keeps the slot, doc_id breaking residual
-    # ties — the composition the oracle-gated `graph_prior` catalog
-    # query pins. Near-dup canonical stays min-doc_id (cluster members
-    # are only similar, not identical; stable ids beat rank there).
-    if graph_prior is not None:
-        j = j.join(
-            F.broadcast(graph_prior.select("host", "host_rank_mi")),
-            "host",
-            "left",
-        ).withColumn(
-            "host_rank_mi", F.coalesce(F.col("host_rank_mi"), F.lit(0)).cast("long")
+                probe_src = bloom_probe(
+                    eligible, "content_sha", prior_bloom, bloom_bits, BLOOM_HASHES
+                ).filter(F.col("maybe_seen"))
+            prior = prior_kept_hashes.select("content_sha").distinct()
+            prior_dups = probe_src.join(prior, "content_sha", "semi").select(
+                "doc_id"
+            )
+            eligible = eligible.join(prior_dups, "doc_id", "left_anti")
+        w = Window.partitionBy("content_sha").orderBy(*order)
+        hits = (
+            eligible.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") > 1)
+            .select("doc_id")
         )
-    eligible = j.filter(
-        F.col("drop_reason").isNull()
-        & (F.col("n_kept_lines") > 0)
-        & ~F.col("contaminated")
-    ).select(
-        "doc_id",
-        F.col("content_sha").alias("_kh"),
-        *(
-            [F.col("host_rank_mi").alias("_hr")]
-            if graph_prior is not None
-            else []
-        ),
-    )
-    if prior_kept_hashes is not None:
-        # Cross-run exact dedup: a hash already committed KEPT owns its
-        # canonical slot forever — new twins drop as dup and are also
-        # excluded from this run's canonical window.
-        probe_src = eligible
-        if prior_bloom is not None and bloom_bits:
-            # Bloom prefilter (functions/bloom.py): the persisted word
-            # table over committed kept hashes screens the NEW side with
-            # broadcast joins only — docs whose hash is definitely not
-            # committed (no false negatives, shared position derivation)
-            # skip the exact semi-join entirely, so the shuffle below
-            # carries the ~(dup-rate + FP-rate) slice instead of the
-            # whole run. Verdicts are IDENTICAL with or without the
-            # sidecar (pytest pins it): a false positive only costs a
-            # redundant exact probe.
-            from ocr_parallel_spark.functions.bloom import bloom_probe
+        j = j.join(hits.withColumn("_hit", F.lit(True)), "doc_id", "left")
+        if prior_dups is not None:
+            # a second join, not a union: it probes the frame the anti-join
+            # above probed, so Spark reuses that exchange
+            j = j.join(
+                prior_dups.withColumn("_pd", F.lit(True)), "doc_id", "left"
+            ).withColumn("_hit", F.coalesce("_hit", "_pd")).drop("_pd")
+        return j
 
-            probe_src = bloom_probe(
-                eligible, "_kh", prior_bloom, bloom_bits, bloom_hashes
-            ).filter(F.col("maybe_seen")).drop("maybe_seen")
-        prior = prior_kept_hashes.select(
-            F.col("content_sha").alias("_kh")
-        ).distinct()
-        prior_dups = probe_src.join(prior, "_kh", "semi").select(
-            "doc_id", F.lit(True).alias("_pd")
-        )
-        eligible = eligible.join(prior_dups, "doc_id", "left_anti")
-    w = Window.partitionBy("_kh").orderBy(
-        *(
-            [F.col("_hr").desc(), F.col("doc_id")]
-            if graph_prior is not None
-            else [F.col("doc_id")]
-        )
-    )
-    dups = (
-        eligible.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") > 1)
-        .select("doc_id", F.lit(True).alias("_dup"))
-    )
-    j = j.join(dups, "doc_id", "left").withColumn(
-        "_dup", F.coalesce(F.col("_dup"), F.lit(False))
-    )
-    if prior_kept_hashes is not None:
-        j = j.join(prior_dups, "doc_id", "left").withColumn(
-            "_dup", F.col("_dup") | F.coalesce(F.col("_pd"), F.lit(False))
-        ).drop("_pd")
-
-    if near_dup:
+    def near_dups(j):
         # Fuzzy near-dup consolidation over the exact-dedup survivors
         # (the minhash_clusters catalog composition, production-wired):
         # LSH candidates -> exact-Jaccard verify -> connected
@@ -469,12 +412,9 @@ def build_output(
             with_minhash_bands,
         )
 
-        survivors = j.filter(
-            F.col("drop_reason").isNull()
-            & (F.col("n_kept_lines") > 0)
-            & ~F.col("contaminated")
-            & ~F.col("_dup")
-        ).select("doc_id", "kept_text")
+        survivors = j.filter(F.col("drop_reason").isNull()).select(
+            "doc_id", "kept_text"
+        )
         # the banding kernel's Arrow schema types the id as string;
         # cast through it and back so downstream labels stay NUMERIC
         # (canonical member = min doc_id, not min lexicographic string).
@@ -520,10 +460,8 @@ def build_output(
             .select("id_a", "id_b")
         )
         cc = connected_components(pairs, src="id_a", dst="id_b")
-        near = (
-            cc.filter(F.col("node") != F.col("component"))
-            .select(F.col("node").alias("doc_id"))
-            .withColumn("_near", F.lit(True))
+        near = cc.filter(F.col("node") != F.col("component")).select(
+            F.col("node").alias("doc_id")
         )
         if prior_kept_neardup is not None:
             # Cross-run near-dup: committed kept signatures band-join
@@ -585,29 +523,33 @@ def build_output(
                 )
                 .select("doc_id")
                 .distinct()
-                .withColumn("_near", F.lit(True))
             )
             near = near.unionByName(cross_hit).distinct()
-        j = j.join(near, "doc_id", "left").withColumn(
-            "_near", F.coalesce(F.col("_near"), F.lit(False))
-        )
-        j = j.join(
-            banded.withColumnRenamed("bands", "minhash_bands"), "doc_id", "left"
-        )
-    else:
-        j = j.withColumn("_near", F.lit(False)).withColumn(
-            "minhash_bands", F.lit(None).cast("array<bigint>")
-        )
+        return j.join(
+            near.withColumn("_hit", F.lit(True)), "doc_id", "left"
+        ).join(banded.withColumnRenamed("bands", "minhash_bands"), "doc_id", "left")
 
     if embeddings is not None:
+        # sem_emb persists in the INPUT's own element type: a float32
+        # source stays float32 (half the state bytes of a double cast —
+        # at 10^12 docs the persisted embeddings dominate the verdict
+        # table's size), and every cosine casts to double at use, which
+        # is exact for float32, so verdicts are identical either way.
+        # Once a table HAS committed sem_emb rows, its type wins
+        # (sem_emb_type, fed by main()): appending a different array
+        # type would poison the table — parquet mergeSchema cannot
+        # reconcile float and double pages under one column.
+        emb_t = sem_emb_type or embeddings.schema["embedding"].dataType
+
+    def sem_dup(j):
         # SemDedup screen (--embeddings): embedding-level duplicate
         # removal for pages whose TEXT differs but whose content does
         # not (templated rewrites, boilerplate-divergent mirrors) —
-        # the layer MinHash cannot see. Runs LAST among the dup stages
-        # over docs that survived everything else, so a textual-dup
-        # canon never loses its slot to a semantic twin. Cross-run
-        # scope when prior_sem is fed (committed kept embeddings under
-        # a pinned geometry); within-run / --recompute otherwise.
+        # the layer MinHash cannot see. Last among the dup stages, so
+        # a textual-dup canon never loses its slot to a semantic twin.
+        # Cross-run scope when prior_sem is fed (committed kept
+        # embeddings under a pinned geometry); within-run / --recompute
+        # otherwise.
         from ocr_parallel_spark.functions.similarity import (
             MAX_CELL,
             _prep_vec,
@@ -623,14 +565,7 @@ def build_output(
         # would execute 2-4x (the bpe stage's load-bearing-checkpoint
         # lesson below).
         j = j.localCheckpoint(eager=False)
-        sem_surv = j.filter(
-            F.col("drop_reason").isNull()
-            & (F.col("n_kept_lines") > 0)
-            & ~F.col("contaminated")
-            & ~F.col("_dup")
-            & ~F.col("_near")
-        ).select("doc_id")
-        vecs = sem_surv.join(
+        vecs = j.filter(F.col("drop_reason").isNull()).select("doc_id").join(
             # one row per doc_id, deterministically (min array): a
             # doubly-delivered embedding row must not fan the doc's
             # verdict out into duplicate rows
@@ -639,16 +574,6 @@ def build_output(
             .agg(F.min("embedding").alias("embedding")),
             "doc_id",
         )
-        # sem_emb persists in the INPUT's own element type: a float32
-        # source stays float32 (half the state bytes of a double cast —
-        # at 10^12 docs the persisted embeddings dominate the verdict
-        # table's size), and every cosine casts to double at use, which
-        # is exact for float32, so verdicts are identical either way.
-        # Once a table HAS committed sem_emb rows, its type wins
-        # (sem_emb_type, fed by main()): appending a different array
-        # type would poison the table — parquet mergeSchema cannot
-        # reconcile float and double pages under one column.
-        emb_t = sem_emb_type or embeddings.schema["embedding"].dataType
         try:
             # PINNED centroids (e.g. job_index's persisted fit) keep
             # the cell geometry identical across incremental runs;
@@ -662,126 +587,126 @@ def build_output(
                 else kmeans_centroids(vecs, n_cells=sem_cells, id_col="doc_id")
             )
         except ValueError:  # no surviving doc has an embedding row
-            j = (
-                j.withColumn("_sem", F.lit(False))
-                .withColumn("sem_cell", F.lit(None).cast("long"))
-                .withColumn("sem_emb", F.lit(None).cast(emb_t))
+            return j.withColumn("_hit", F.lit(False))
+        # sem0 feeds three branches (within-run marks, the cross-run
+        # probe's cell map, and verdict persistence) — pin it once,
+        # the `banded` rule
+        sem0 = semdedup_marks(
+            vecs, cents, sem_threshold, id_col="doc_id"
+        ).localCheckpoint(eager=False)
+        sem = sem0.filter(F.col("is_sem_dup")).select("doc_id")
+        if prior_sem is not None:
+            # Cross-run SemDedup: committed kept embeddings (persisted
+            # as sem_emb under the SAME pinned geometry) probe the new
+            # run's surviving vectors cell-by-cell; a verified new twin
+            # drops, the committed doc keeps its slot. Only within-run
+            # SURVIVORS probe (a within-run-marked doc drops anyway):
+            # they'd otherwise inflate the occupancy count and waste
+            # pair-join work. The cap bounds the COMBINED (new +
+            # committed) cell occupancy at MAX_CELL — one hot cell
+            # joins at most (MAX_CELL/2)^2 pairs, the same
+            # total-occupancy rule the cross-run band join applies
+            # (ADVICE r4); overflow cells pass through unprobed, a
+            # bounded recall trade. Norms are materialized once per ROW
+            # (_prep_vec) — inside the pair condition they would
+            # recompute per pair.
+            new_side = _prep_vec(
+                sem0.filter(~F.col("is_sem_dup"))
+                .select("doc_id", F.col("cell").cast("long").alias("cell"))
+                .join(vecs, "doc_id"),
+                "embedding",
+                "_x",
+            ).select("doc_id", "cell", "_xvec", "_xnorm")
+            pri = _prep_vec(
+                prior_sem.select(
+                    F.col("sem_cell").alias("cell"),
+                    F.col("sem_emb").alias("_p_emb"),
+                ),
+                "_p_emb",
+                "_p",
+            ).select("cell", "_pvec", "_pnorm")
+            occ = (
+                new_side.select("cell")
+                .unionByName(pri.select("cell"))
+                .groupBy("cell")
+                .agg(F.count(F.lit(1)).alias("_n"))
+                .filter(F.col("_n") <= MAX_CELL)
+                .select("cell")
             )
-        else:
-            # sem0 feeds three branches (within-run marks, the
-            # cross-run probe's cell map, and verdict persistence) —
-            # pin it once, the `banded` rule
-            sem0 = semdedup_marks(
-                vecs, cents, sem_threshold, id_col="doc_id"
-            ).localCheckpoint(eager=False)
-            sem = (
-                sem0.filter(F.col("is_sem_dup"))
-                .select("doc_id")
-                .withColumn("_sem", F.lit(True))
-            )
-            if prior_sem is not None:
-                # Cross-run SemDedup: committed kept embeddings
-                # (persisted as sem_emb under the SAME pinned
-                # geometry) probe the new run's surviving vectors
-                # cell-by-cell; a verified new twin drops, the
-                # committed doc keeps its slot. Only within-run
-                # SURVIVORS probe (a within-run-marked doc drops
-                # anyway): they'd otherwise inflate the occupancy
-                # count and waste pair-join work. The cap bounds the
-                # COMBINED (new + committed) cell occupancy at
-                # MAX_CELL — one hot cell joins at most (MAX_CELL/2)^2
-                # pairs, the same total-occupancy rule the cross-run
-                # band join applies (ADVICE r4); overflow cells pass
-                # through unprobed, a bounded recall trade. Norms are
-                # materialized once per ROW (_prep_vec) — inside the
-                # pair condition they would recompute per pair.
-                new_side = _prep_vec(
-                    sem0.filter(~F.col("is_sem_dup"))
-                    .select("doc_id", F.col("cell").cast("long").alias("cell"))
-                    .join(vecs, "doc_id"),
-                    "embedding",
-                    "_x",
-                ).select("doc_id", "cell", "_xvec", "_xnorm")
-                pri = _prep_vec(
-                    prior_sem.select(
-                        F.col("sem_cell").alias("cell"),
-                        F.col("sem_emb").alias("_p_emb"),
-                    ),
-                    "_p_emb",
-                    "_p",
-                ).select("cell", "_pvec", "_pnorm")
-                occ = (
-                    new_side.select("cell")
-                    .unionByName(pri.select("cell"))
-                    .groupBy("cell")
-                    .agg(F.count(F.lit(1)).alias("_n"))
-                    .filter(F.col("_n") <= MAX_CELL)
-                    .select("cell")
-                )
-                cross_hit = (
-                    new_side.join(occ, "cell", "semi")
-                    .join(pri.join(occ, "cell", "semi"), "cell")
-                    .filter(
-                        # same arithmetic AND 4-decimal rounding as
-                        # semdedup_marks, so a pair at the threshold
-                        # boundary gets the same verdict within-run
-                        # and cross-run
-                        F.round(
-                            cosine_from_norms(
-                                F.col("_xvec"),
-                                F.col("_pvec"),
-                                F.col("_xnorm"),
-                                F.col("_pnorm"),
-                            ),
-                            4,
-                        )
-                        >= sem_threshold
-                    )
-                    .select("doc_id")
-                    .distinct()
-                    .withColumn("_sem", F.lit(True))
-                )
-                sem = sem.unionByName(cross_hit).distinct()
-            j = (
-                j.join(sem, "doc_id", "left")
-                .withColumn("_sem", F.coalesce(F.col("_sem"), F.lit(False)))
-                # persist the semantic-dedup state on the verdict row
-                # (the minhash_bands pattern): cell + embedding of
-                # every doc that carried a vector this run
-                .join(
-                    # cell is an int literal inside semdedup_marks; cast
-                    # long so vector-less runs' NULL branch matches
-                    sem0.select(
-                        "doc_id", F.col("cell").cast("long").alias("sem_cell")
-                    )
-                    .join(
-                        vecs.select(
-                            "doc_id",
-                            F.col("embedding").cast(emb_t).alias("sem_emb"),
+            cross_hit = (
+                new_side.join(occ, "cell", "semi")
+                .join(pri.join(occ, "cell", "semi"), "cell")
+                .filter(
+                    # same arithmetic AND 4-decimal rounding as
+                    # semdedup_marks, so a pair at the threshold
+                    # boundary gets the same verdict within-run
+                    # and cross-run
+                    F.round(
+                        cosine_from_norms(
+                            F.col("_xvec"),
+                            F.col("_pvec"),
+                            F.col("_xnorm"),
+                            F.col("_pnorm"),
                         ),
+                        4,
+                    )
+                    >= sem_threshold
+                )
+                .select("doc_id")
+                .distinct()
+            )
+            sem = sem.unionByName(cross_hit).distinct()
+        return (
+            j.join(sem.withColumn("_hit", F.lit(True)), "doc_id", "left")
+            # persist the semantic-dedup state on the verdict row
+            # (the minhash_bands pattern): cell + embedding of
+            # every doc that carried a vector this run
+            .join(
+                # cell is an int literal inside semdedup_marks; cast
+                # long so vector-less runs' NULL default matches
+                sem0.select(
+                    "doc_id", F.col("cell").cast("long").alias("sem_cell")
+                ).join(
+                    vecs.select(
                         "doc_id",
+                        F.col("embedding").cast(emb_t).alias("sem_emb"),
                     ),
                     "doc_id",
-                    "left",
-                )
+                ),
+                "doc_id",
+                "left",
             )
-    else:
-        j = j.withColumn("_sem", F.lit(False))
+        )
 
-    reason = F.coalesce(
-        F.col("drop_reason"),
-        F.when(F.col("n_kept_lines") == 0, F.lit("boilerplate"))
-        .when(F.col("contaminated"), F.lit("contaminated"))
-        .when(F.col("_dup"), F.lit("dup"))
-        .when(F.col("_near"), F.lit("near_dup"))
-        .when(F.col("_sem"), F.lit("sem_dup")),
-    )
+    screens = [
+        *doc_screens(blocked_hosts),  # blocked, lang, too_short, pii
+        ("robots", robots) if robots_df is not None else None,
+        ("low_quality", low_quality) if quality_filter else None,
+        ("high_surprise", high_surprise) if lm_ref is not None else None,
+        ("boilerplate", boilerplate),
+        ("contaminated", contaminated) if bench_docs is not None else None,
+        ("dup", dup),
+        ("near_dup", near_dups) if near_dup else None,
+        ("sem_dup", sem_dup) if embeddings is not None else None,
+    ]
+    j = fold_screens(doc_signals(docs), [s for s in screens if s is not None])
+
     # The verdict table doubles as the CURATED CORPUS: kept docs carry
-    # their cleaned text (dropped docs carry NULL — at 100 TB the
-    # drop-fraction's bytes are the dominant storage cost and their
-    # text is reproducible from input + reason), plus the source tag
-    # the packer stratifies on. job_pack --from-verdicts consumes this
-    # directly — curate -> pack with no second read of the raw corpus.
+    # their cleaned text and dedup state (dropped docs carry NULL — at
+    # 100 TB the drop-fraction's bytes are the dominant storage cost and
+    # their text is reproducible from input + reason), plus the source
+    # tag the packer stratifies on. job_pack --from-verdicts consumes
+    # this directly — curate -> pack with no second read of the raw
+    # corpus. A verdict column whose screen is off holds its default.
+    kept = F.col("drop_reason").isNull()
+    recorded = set(j.columns)
+
+    def col_or(name, default):
+        return F.col(name) if name in recorded else default
+
+    def kept_only(name, dtype):
+        return F.when(kept, col_or(name, F.lit(None).cast(dtype))).alias(name)
+
     out = j.join(docs.select("doc_id", "source"), "doc_id").select(
         "doc_id",
         "host",
@@ -790,21 +715,15 @@ def build_output(
         "n_tokens",
         "n_pii",
         "n_kept_lines",
-        "contaminated",
+        col_or("contaminated", F.lit(False)).alias("contaminated"),
         "content_sha",
-        reason.isNull().alias("kept"),
-        reason.alias("drop_reason"),
-        F.when(reason.isNull(), F.col("kept_text")).alias("kept_text"),
-        F.when(reason.isNull(), F.col("minhash_bands")).alias("minhash_bands"),
-        *(["host_rank_mi"] if graph_prior is not None else []),
-        *(["surprise_x16"] if lm_ref is not None else []),
+        kept.alias("kept"),
+        "drop_reason",
+        F.when(kept, F.col("kept_text")).alias("kept_text"),
+        kept_only("minhash_bands", "array<bigint>"),
+        *(c for c in ("host_rank_mi", "surprise_x16") if c in recorded),
         *(
-            # the cross-run SemDedup state (kept docs only — a dropped
-            # doc never owns a semantic slot), the minhash_bands rule
-            [
-                F.when(reason.isNull(), F.col("sem_cell")).alias("sem_cell"),
-                F.when(reason.isNull(), F.col("sem_emb")).alias("sem_emb"),
-            ]
+            [kept_only("sem_cell", "long"), kept_only("sem_emb", emb_t)]
             if embeddings is not None
             else []
         ),
@@ -1189,16 +1108,18 @@ def main() -> None:
             lin = (bsnap or {}).get("lineage", {})
             if not (
                 lin.get("n_bits") == args.bloom_bits
-                and lin.get("n_hashes") == 4
+                and lin.get("n_hashes") == BLOOM_HASHES
                 and lin.get("covers_ordinal") == verd_ord
             ):
                 from ocr_parallel_spark.functions.bloom import bloom_build
 
                 bloom_table.overwrite(
-                    bloom_build(prior_hashes, "content_sha", args.bloom_bits, 4),
+                    bloom_build(
+                        prior_hashes, "content_sha", args.bloom_bits, BLOOM_HASHES
+                    ),
                     lineage={
                         "n_bits": args.bloom_bits,
-                        "n_hashes": 4,
+                        "n_hashes": BLOOM_HASHES,
                         "covers_ordinal": verd_ord,
                         "mode": "rebuild",
                     },
@@ -1349,7 +1270,7 @@ def main() -> None:
                     run_df.filter("kept").select("content_sha"),
                     "content_sha",
                     args.bloom_bits,
-                    4,
+                    BLOOM_HASHES,
                 ),
             )
             mode = "merge"
@@ -1359,14 +1280,14 @@ def main() -> None:
                 committed_now.filter("kept").select("content_sha"),
                 "content_sha",
                 args.bloom_bits,
-                4,
+                BLOOM_HASHES,
             )
             mode = "rebuild"
         bloom_table.overwrite(
             words,
             lineage={
                 "n_bits": args.bloom_bits,
-                "n_hashes": 4,
+                "n_hashes": BLOOM_HASHES,
                 "covers_ordinal": new_ord,
                 "mode": mode,
             },

@@ -974,3 +974,121 @@ def test_cross_run_sem_dedup_skipped_without_prior(spark, tmp_path):
     got = {r.doc_id: r for r in final.collect()}
     assert got[10].kept and got[20].kept
     assert dict(final.dtypes)["sem_emb"] == "array<float>"
+
+
+def test_screen_precedence_with_every_screen_on(spark):
+    """One build_output call with every screen on. Each planted doc fails
+    two screens and must carry the earlier one's reason, which pins the
+    full order blocked > lang > too_short > pii > robots > low_quality >
+    high_surprise > boilerplate > contaminated > dup > near_dup > sem_dup.
+    A doc dropped by an earlier screen never takes a dup, near_dup or
+    sem_dup canonical slot: its twin stays kept."""
+    import hashlib
+
+    from ocr_parallel_spark.functions.curation import QT_BUCKETS
+
+    def body(tag, a="the", b="and", n=12):
+        return " ".join(f"{a} {tag}n{i} {b}" for i in range(n))
+
+    def es(tag, n=12):
+        return body(tag, "el", "de", n)
+
+    def near(tag):  # one word changed: Jaccard ~0.87 with body(tag)
+        return body(tag).replace(f"{tag}n11", f"{tag}x11")
+
+    pii = " ann@mail.org bob@mail.org"
+    bench_line = "the benchmark passage reads one two three four five"
+    def banner(tag):  # 4 lines of 8 tokens, sharing no trigram with other text
+        return "\n".join(
+            f"the {tag}{i}a and " + " ".join(f"{tag}{i}{c}" for c in "bcdef")
+            for i in range(4)
+        )
+
+    banner_a, banner_b = banner("alpha"), banner("bravo")
+    ok, blk, rob = "https://ok.org/", "https://blocked.org/", "https://robots.org/"
+    # (doc_id, url, text, expected drop_reason or None for kept, taint,
+    # in the LM reference)
+    plan = [
+        (1, blk + "1", es("p1"), "blocked", False, True),
+        (2, ok + "2", es("p2", n=3), "lang", False, True),
+        (3, ok + "3", body("p3", n=3) + pii, "too_short", False, True),
+        (4, rob + "4", body("p4") + pii, "pii", False, True),
+        (5, rob + "5", body("p5"), "robots", True, True),
+        (6, ok + "6", body("p6"), "low_quality", True, False),
+        (7, ok + "7", banner_b, "high_surprise", False, False),
+        (8, ok + "8", banner_a, "boilerplate", False, True),
+        (9, ok + "9", body("p9") + " " + bench_line, "contaminated", False, True),
+        (10, ok + "10", body("p9") + " " + bench_line, "contaminated", False, True),
+        (11, ok + "11", body("p11"), None, False, True),
+        (12, ok + "12", body("p11"), "dup", False, True),
+        (13, ok + "13", body("p13"), None, False, True),
+        (14, ok + "14", near("p13"), "near_dup", False, True),
+        (15, ok + "15", body("p15"), None, False, True),
+        (16, ok + "16", body("p16"), "sem_dup", False, True),
+        # canonical slots: the screened-out twin has the lower doc_id
+        (17, rob + "17", body("s1"), "robots", False, True),
+        (18, ok + "18", body("s1"), None, False, True),
+        (19, ok + "19", body("s2") + pii, "pii", False, True),
+        (20, ok + "20", near("s2"), None, False, True),
+        (21, ok + "21", body("s3"), "low_quality", True, True),
+        (22, ok + "22", body("s4"), None, False, True),
+    ]
+    # banner lines need >= min_line_count docs; the extra carriers are blocked
+    plan += [
+        (30 + i, blk + str(30 + i), banner, "blocked", False, ref)
+        for i, (banner, ref) in enumerate(
+            [(banner_a, True)] * 4 + [(banner_b, False)] * 4
+        )
+    ]
+    # embedding twins: 13/14 (near_dup wins), 15/16, 21/22
+    emb = spark.createDataFrame(
+        [
+            (i, [0.0] * k + [10.0, 1.0 + 0.1 * (i % 2)] + [0.0] * (14 - k))
+            for k, pair in enumerate([(13, 14), (15, 16), (21, 22)])
+            for i in pair
+        ],
+        "doc_id long, embedding array<double>",
+    )
+
+    def bucket(tok):
+        return int(hashlib.sha256(tok.encode()).hexdigest()[:4], 16) % QT_BUCKETS
+
+    used = {bucket(t) for p in plan for t in " ".join(p[2].split()).split(" ")}
+    taint = next(
+        f"qtaint{k}" for k in range(100) if bucket(f"qtaint{k}") not in used
+    )
+    rows = [
+        (i, url, text + (" " + taint if tainted else ""), "en", "s")
+        for i, url, text, _, tainted, _ in plan
+    ]
+    docs = spark.createDataFrame(
+        rows, "doc_id long, url string, text string, lang string, source string"
+    )
+    in_ref = [r for r, p in zip(rows, plan) if p[5]]
+    out = job.build_output(
+        spark,
+        docs,
+        spark.createDataFrame([("blocked.org",)], "host string"),
+        spark.createDataFrame([(bench_line,)], "text string"),
+        robots_df=spark.createDataFrame(
+            [("robots.org", "User-agent: *\nDisallow: /\n")],
+            "host string, robots_txt string",
+        ),
+        quality_filter=True,
+        quality_weights=spark.createDataFrame(
+            [(bucket(taint), 1)], "_bucket long, _wt long"
+        ),
+        # every reference doc appears twice: the LM prunes grams seen once
+        lm_ref=docs.filter(F.col("doc_id").isin([r[0] for r in in_ref]))
+        .unionByName(docs.filter(F.col("doc_id").isin([r[0] for r in in_ref]))),
+        lm_max_x16=200,
+        near_dup=True,
+        embeddings=emb,
+        sem_cells=1,
+    )
+    got = {r.doc_id: r for r in out.collect()}
+    assert {i: got[i].drop_reason for i, *_ in plan} == {
+        i: want for i, _, _, want, _, _ in plan
+    }
+    for i, *_ in plan:
+        assert got[i].kept == (got[i].drop_reason is None)
